@@ -424,9 +424,11 @@ object Bench {
   }
 
   /** The compact final line — the LAST stdout line of a top-level run,
-    * and the one the driver parses. Query medians at 3 decimals
-    * (Double.toString of the rounded value: locale-independent, trailing
-    * zeros dropped). Extracted for the length pin in BenchGuardSpec.
+    * and the one the driver parses. Query medians at 3 decimals below
+    * 10 s and 4 significant digits above, so a median up to 999 s stays
+    * five characters wide (Double.toString of the rounded value:
+    * locale-independent, trailing zeros dropped; the detail line keeps
+    * full precision). Extracted for the length pin in BenchGuardSpec.
     */
   private[graft] def benchFinalLine(qMed: collection.Map[String, Double],
                                     errors: Int, failed: Seq[String],
@@ -434,7 +436,11 @@ object Bench {
                                     guard: String, reruns: Seq[String] = Nil,
                                     fallbackReason: String = ""): String = {
     def r3(x: Double): Double = math.round(x * 1000) / 1000.0
-    val q = qMed.map { case (k, v) => "\"" + k + "\":" + r3(v) }
+    def short(x: Double): Double = {
+      val scale = if (x >= 100) 10.0 else if (x >= 10) 100.0 else 1000.0
+      math.round(x * scale) / scale
+    }
+    val q = qMed.map { case (k, v) => "\"" + k + "\":" + short(v) }
       .mkString("{", ",", "}")
     val total = if (errors > 0) -1.0 else r3(qMed.values.sum)
     val failedArr = failed.map("\"" + _ + "\"").mkString("[", ",", "]")

@@ -25,9 +25,13 @@ package graft.db
   * builds one (refcount 1); [[release]] decrements and unpersists at
   * zero — so a superseded snapshot's blocks survive exactly until the
   * last instance still serving it refreshes, and `disableServing` on
-  * the only holder frees the memory as before. Entries whose
-  * SparkContext has stopped are rebuilt, not returned (test suites
-  * restart sessions).
+  * the only holder frees the memory as before. Entries that are no
+  * longer [[PreparedScan.isAlive]] are rebuilt, not returned: their
+  * SparkContext stopped (test suites restart sessions), or a search
+  * found one of their blocks lost. A lost entry that still has holders
+  * is retired, not forgotten — each holder's [[release]] names the scan
+  * it holds, so it reaches the retired entry (and the last one frees
+  * it) instead of decrementing the rebuilt entry under the same key.
   */
 private[graft] object BlockCache {
 
@@ -42,6 +46,17 @@ private[graft] object BlockCache {
 
   private val current = new java.util.concurrent.ConcurrentHashMap[Key, String]()
   private val entries = new java.util.concurrent.ConcurrentHashMap[(Key, String), Entry]()
+  /** Dead (lost) entries still referenced by holders, by scan identity. */
+  private val retired = new java.util.IdentityHashMap[PreparedScan, Entry]()
+
+  /** Drop a dead entry from the live map (caller holds the lock):
+    * retired while a holder may still release it, forgotten when its
+    * SparkContext stopped (nothing left to free).
+    */
+  private def evictDead(k: (Key, String), e: Entry): Unit = {
+    entries.remove(k)
+    if (e.refs > 0 && !e.scan.contextStopped) retired.put(e.scan, e)
+  }
 
   /** The folder's current snapshot version in this JVM; `load` reads
     * the on-disk marker the first time the folder is seen. Hot-path
@@ -92,7 +107,7 @@ private[graft] object BlockCache {
       val hit = synchronized {
         val e = entries.get(k)
         if (e != null && e.scan.isAlive) { e.refs += 1; e.scan }
-        else { if (e != null) entries.remove(k); null }
+        else { if (e != null) evictDead(k, e); null }
       }
       if (hit != null) return hit
       val mine = new Building
@@ -118,7 +133,7 @@ private[graft] object BlockCache {
               dup = scan
               e.scan
             } else {
-              if (e != null) entries.remove(k)
+              if (e != null) evictDead(k, e)
               val ne = new Entry(scan)
               ne.refs = 1
               entries.put(k, ne)
@@ -126,7 +141,7 @@ private[graft] object BlockCache {
             }
           }
           mine.result = out
-          if ((dup ne null) && dup.isAlive) dup.unpersist()
+          if (dup ne null) dup.unpersist()
           return out
         } finally {
           building.remove(k)
@@ -180,7 +195,7 @@ private[graft] object BlockCache {
       val e = entries.get(k)
       if (e != null && e.scan.isAlive) { e.refs += 1; e.scan }
       else {
-        if (e != null) entries.remove(k)
+        if (e != null) evictDead(k, e)
         val ne = new Entry(scan)
         ne.refs = 1
         entries.put(k, ne)
@@ -188,14 +203,19 @@ private[graft] object BlockCache {
       }
     }
 
-  /** Drop one reference; unpersist and forget the entry at zero. */
-  def release(key: Key, version: String): Unit = synchronized {
-    val e = entries.get((key, version))
+  /** Drop the caller's reference on `scan` (the entry it acquired under
+    * (key, version), live or retired); unpersist and forget the entry at
+    * zero.
+    */
+  def release(key: Key, version: String, scan: PreparedScan): Unit = synchronized {
+    val k = (key, version)
+    val live = entries.get(k)
+    val e = if (live != null && (live.scan eq scan)) live else retired.get(scan)
     if (e != null) {
       e.refs -= 1
       if (e.refs <= 0) {
-        entries.remove((key, version))
-        if (e.scan.isAlive) e.scan.unpersist()
+        if (e eq live) entries.remove(k) else retired.remove(scan)
+        e.scan.unpersist()
       }
     }
   }

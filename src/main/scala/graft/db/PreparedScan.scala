@@ -33,6 +33,24 @@ import org.apache.spark.storage.StorageLevel
   * O(P·B). Beyond cluster RAM, disable serving and stay on the parquet
   * path.
   *
+  * Lineage: every block RDD is `localCheckpoint`ed before the job that
+  * materializes it, so once cached it carries no codes⋈docs plan — a
+  * search ships only the query and the scan function (task binary at
+  * 100k docs: 53,755 B → 3,988 B, task deserialization ~2 ms → 0). The
+  * price is that a block can no longer be recomputed: a block lost
+  * with its executor — including an executor that dynamic allocation
+  * removed — fails the scan job with `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`.
+  * The scan then marks itself lost ([[isAlive]] false, [[ScanLost]])
+  * and the facade rebuilds the tier and retries once; lost blocks are
+  * handled by a rebuild, not a recompute. Measured end to end (ABBA
+  * table in ARCHITECTURE.md): served `searchHits` throughput ×1.45 at
+  * 100k docs on 4 cores, p50 latency −20%.
+  *
+  * Pinning: the scan is refcounted — one owner reference plus one per
+  * in-flight job. [[unpersist]] drops the owner reference; the blocks
+  * free when the count reaches zero, so a commit that releases the
+  * scan mid-search never pulls the blocks out from under the job.
+  *
   * IVF probing: blocks carry the per-row cell and a per-block distinct
   * cell set; a probed-cell query skips whole blocks whose cells don't
   * intersect the probe set (the RDD analogue of the cell-partitioned
@@ -51,6 +69,10 @@ final class PreparedScan private (
       * reads.
       */
     private[graft] val rowsLowerBound: Long,
+    /** The scan whose blocks this chain layer reuses (null for a full
+      * build).
+      */
+    private val base: PreparedScan,
     onFree: () => Unit) {
 
   /** Serving block count (one per source partition; chains add their
@@ -75,28 +97,30 @@ final class PreparedScan private (
            probed: Option[Array[Int]] = None,
            sel: Option[IdSet] = None): Array[PreparedScan.Hit] = {
     require(b > 0, s"b must be positive, got $b")
-    val nw = nWords
-    val probeSorted = probed.map { p => val c = p.clone(); java.util.Arrays.sort(c); c }
-    val selSet = sel.orNull
-    val supB = supBc
-    val perPart: Array[Array[PreparedScan.Hit]] =
-      blocks.sparkContext.runJob(blocks,
-        (it: Iterator[PreparedScan.Block]) => {
-          if (!it.hasNext) Array.empty[PreparedScan.Hit]
-          else {
-            val blk = it.next()
-            val skip = probeSorted.exists(p =>
-              !blk.distinctCells.exists(c => java.util.Arrays.binarySearch(p, c) >= 0))
-            if (skip) Array.empty[PreparedScan.Hit]
-            else PreparedScan.dispatchScan(blk, qWords, nw, b, probeSorted.orNull,
-              if (selSet == null) null else selSet.probe(),
-              if (supB == null) null else supB.value)
-          }
-        })
-    // each partition's result is rank-sorted; merge and cut to B
-    val merged = perPart.flatten
+    val merged = pinnedJob(topBFn(qWords, b, probed, sel)).flatten
     java.util.Arrays.sort(merged, PreparedScan.rankOrder)
     merged.take(b)
+  }
+
+  /** [[topB]]'s per-block function. Captures locals only — never
+    * `this` — so the task binary is the function plus the lineage-free
+    * block RDD.
+    */
+  private def topBFn(qWords: Array[Long], b: Int, probed: Option[Array[Int]],
+                     sel: Option[IdSet]): Iterator[PreparedScan.Block] => Array[PreparedScan.Hit] = {
+    val nw = nWords
+    val probeSorted = probed.map(PreparedScan.sortedCells).orNull
+    val selSet = sel.orNull
+    val supB = supBc
+    it =>
+      if (!it.hasNext) Array.empty[PreparedScan.Hit]
+      else {
+        val blk = it.next()
+        if (PreparedScan.skipBlock(blk, probeSorted)) Array.empty[PreparedScan.Hit]
+        else PreparedScan.dispatchScan(blk, qWords, nw, b, probeSorted,
+          if (selSet == null) null else selSet.probe(),
+          if (supB == null) null else supB.value)
+      }
   }
 
   /** Batched [[topB]]: all Q queries scan the SAME blocks inside ONE
@@ -118,26 +142,22 @@ final class PreparedScan private (
     val nw = nWords
     val nq = qs.length
     val probeSorted: Array[Array[Int]] =
-      probed.map(_.map { p => val c = p.clone(); java.util.Arrays.sort(c); c }).orNull
+      probed.map(_.map(PreparedScan.sortedCells)).orNull
     val selSet = sel.orNull
     val supB = supBc
-    val perPart: Array[Array[Array[PreparedScan.Hit]]] =
-      blocks.sparkContext.runJob(blocks,
-        (it: Iterator[PreparedScan.Block]) => {
-          if (!it.hasNext) Array.fill(nq)(Array.empty[PreparedScan.Hit])
-          else {
-            val blk = it.next()
-            val selProbe = if (selSet == null) null else selSet.probe()
-            val sup = if (supB == null) null else supB.value
-            Array.tabulate(nq) { qi =>
-              val p = if (probeSorted == null) null else probeSorted(qi)
-              val skip = p != null && !blk.distinctCells.exists(c =>
-                java.util.Arrays.binarySearch(p, c) >= 0)
-              if (skip) Array.empty[PreparedScan.Hit]
-              else PreparedScan.dispatchScan(blk, qs(qi), nw, b, p, selProbe, sup)
-            }
-          }
-        })
+    val perPart: Array[Array[Array[PreparedScan.Hit]]] = pinnedJob { it =>
+      if (!it.hasNext) Array.fill(nq)(Array.empty[PreparedScan.Hit])
+      else {
+        val blk = it.next()
+        val selProbe = if (selSet == null) null else selSet.probe()
+        val sup = if (supB == null) null else supB.value
+        Array.tabulate(nq) { qi =>
+          val p = if (probeSorted == null) null else probeSorted(qi)
+          if (PreparedScan.skipBlock(blk, p)) Array.empty[PreparedScan.Hit]
+          else PreparedScan.dispatchScan(blk, qs(qi), nw, b, p, selProbe, sup)
+        }
+      }
+    }
     Array.tabulate(nq) { qi =>
       val merged = perPart.flatMap(_(qi))
       java.util.Arrays.sort(merged, PreparedScan.rankOrder)
@@ -160,40 +180,96 @@ final class PreparedScan private (
                    sel: Option[IdSet] = None): Array[PreparedScan.Hit] = {
     require(radius >= 0, s"radius must be >= 0, got $radius")
     val nw = nWords
-    val probeSorted = probed.map { p => val c = p.clone(); java.util.Arrays.sort(c); c }
+    val probeSorted = probed.map(PreparedScan.sortedCells).orNull
     val selSet = sel.orNull
     val supB = supBc
-    val perPart: Array[Array[PreparedScan.Hit]] =
-      blocks.sparkContext.runJob(blocks,
-        (it: Iterator[PreparedScan.Block]) => {
-          if (!it.hasNext) Array.empty[PreparedScan.Hit]
-          else {
-            val blk = it.next()
-            val skip = probeSorted.exists(p =>
-              !blk.distinctCells.exists(c => java.util.Arrays.binarySearch(p, c) >= 0))
-            if (skip) Array.empty[PreparedScan.Hit]
-            else PreparedScan.rangeScanBlock(blk, qWords, nw, radius,
-              probeSorted.orNull, if (selSet == null) null else selSet.probe(),
-              if (supB == null) null else supB.value)
-          }
-        })
-    val merged = perPart.flatten
+    val merged = pinnedJob { it =>
+      if (!it.hasNext) Array.empty[PreparedScan.Hit]
+      else {
+        val blk = it.next()
+        if (PreparedScan.skipBlock(blk, probeSorted)) Array.empty[PreparedScan.Hit]
+        else PreparedScan.rangeScanBlock(blk, qWords, nw, radius, probeSorted,
+          if (selSet == null) null else selSet.probe(),
+          if (supB == null) null else supB.value)
+      }
+    }.flatten
     java.util.Arrays.sort(merged, PreparedScan.rankOrder)
     merged
   }
 
-  /** Free what this scan OWNS: a full build unpersists its block RDD; a
-    * chain extension unpersists its own delta layer and drops its
-    * reference on the base scan (cascading down the chain as refcounts
-    * reach zero).
+  /** One owner reference ([[unpersist]] drops it) plus one per
+    * in-flight [[pinnedJob]]; the blocks free when it reaches zero.
     */
-  def unpersist(): Unit = onFree()
+  private val refs = new java.util.concurrent.atomic.AtomicInteger(1)
+  private val ownerReleased = new java.util.concurrent.atomic.AtomicBoolean(false)
+  /** Set when a job found a block gone (executor lost, block evicted
+    * from a lineage-free RDD): the scan can never answer again.
+    */
+  @volatile private var lost = false
 
-  /** False once the owning SparkContext has stopped (the blocks died
-    * with it); [[BlockCache]] rebuilds instead of returning such an
-    * entry.
+  /** Take an in-flight reference; false once the blocks are freed. */
+  private[db] def pin(): Boolean = {
+    var c = refs.get()
+    while (c > 0 && !refs.compareAndSet(c, c + 1)) c = refs.get()
+    c > 0
+  }
+
+  /** Drop an in-flight reference; the last one out frees the blocks
+    * (nothing to free on a stopped SparkContext — they died with it).
     */
-  private[db] def isAlive: Boolean = !blocks.sparkContext.isStopped
+  private[db] def unpin(): Unit =
+    if (refs.decrementAndGet() == 0 && !contextStopped) onFree()
+
+  /** Run one scan job over every block with the scan pinned. A scan
+    * already freed, or whose job finds a block gone
+    * (`CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND` — the blocks have no lineage to
+    * recompute from), throws [[PreparedScan.ScanLost]] and is no longer
+    * [[isAlive]]; the serving facade rebuilds and retries.
+    */
+  private def pinnedJob[U: scala.reflect.ClassTag](
+      f: Iterator[PreparedScan.Block] => U): Array[U] = {
+    if (!pin()) throw new PreparedScan.ScanLost("serving scan already freed", null)
+    try blocks.sparkContext.runJob(blocks, f)
+    catch {
+      case e: Exception if PreparedScan.isLostBlock(e) =>
+        markLost()
+        throw new PreparedScan.ScanLost("serving block lost", e)
+    } finally unpin()
+  }
+
+  /** Mark this scan, and every scan whose blocks it reuses, lost: a
+    * failed chain job cannot tell which layer lost the block.
+    */
+  private def markLost(): Unit = {
+    lost = true
+    if (base != null) base.markLost()
+  }
+
+  /** Free what this scan OWNS, once no job is in flight: a full build
+    * unpersists its block RDD; a chain extension unpersists its own
+    * delta layer and drops its reference on the base scan (cascading
+    * down the chain as refcounts reach zero). Idempotent.
+    */
+  def unpersist(): Unit = if (ownerReleased.compareAndSet(false, true)) unpin()
+
+  /** False once the owner released the scan, a job lost one of its
+    * blocks, or the owning SparkContext stopped (the blocks died with
+    * it); [[BlockCache]] rebuilds instead of returning such an entry.
+    */
+  private[db] def isAlive: Boolean =
+    !lost && !ownerReleased.get() && !contextStopped
+
+  private[db] def contextStopped: Boolean = blocks.sparkContext.isStopped
+
+  /** Test hooks: the bytes one [[topB]] task ships (the block RDD and
+    * its scan function, serialized the way the scheduler builds a task
+    * binary), and the id of the RDD this scan runs its jobs on (for a
+    * full build, the cached block RDD).
+    */
+  private[graft] def taskBinaryBytes(qWords: Array[Long], b: Int): Int =
+    org.apache.spark.SparkEnv.get.closureSerializer.newInstance()
+      .serialize((blocks, topBFn(qWords, b, None, None))).limit()
+  private[graft] def blocksRddId: Int = blocks.id
 }
 
 object PreparedScan {
@@ -310,6 +386,31 @@ object PreparedScan {
   object ChainInfo {
     val none: ChainInfo = ChainInfo(0, 0L, 0L, (0, 0), (0, 0))
   }
+
+  /** A search reached a scan that can no longer answer: freed by its
+    * owner before the search pinned it, or one of its lineage-free
+    * blocks is gone. The scan is not [[PreparedScan.isAlive]] any more;
+    * rebuild and retry.
+    */
+  final class ScanLost(msg: String, cause: Throwable)
+      extends RuntimeException(msg, cause)
+
+  /** A job failure caused by a lost block of a local-checkpointed RDD
+    * (the driver's stage-failure message quotes the task's error).
+    */
+  private[db] def isLostBlock(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16)
+      .exists(t => String.valueOf(t.getMessage).contains("CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"))
+
+  /** Sorted copy of an IVF probe set. */
+  private def sortedCells(probed: Array[Int]): Array[Int] = {
+    val c = probed.clone(); java.util.Arrays.sort(c); c
+  }
+
+  /** A probed query skips blocks holding none of its cells. */
+  private def skipBlock(blk: Block, probeSorted: Array[Int]): Boolean =
+    probeSorted != null &&
+      !blk.distinctCells.exists(c => java.util.Arrays.binarySearch(probeSorted, c) >= 0)
 
   private[db] val rankOrder: java.util.Comparator[Hit] =
     (x: Hit, y: Hit) => {
@@ -528,7 +629,7 @@ object PreparedScan {
     blockStore.foreach(_.writeManifestIfComplete(blocks.getNumPartitions,
       rows, chain.morCeilings, chain.morFolds))
     new PreparedScan(blocks, nWords, null, chain.copy(baseRows = rows),
-      rows, () => blocks.unpersist())
+      rows, null, () => blocks.unpersist())
   }
 
   /** Rebuild the serving tier PURELY from [[BlockStore]] files — the
@@ -549,23 +650,25 @@ object PreparedScan {
                     chain: ChainInfo): Option[PreparedScan] =
     store.readManifest().flatMap { manifest =>
       val nBlocks = manifest.nBlocks
+      val storeB = sc.broadcast(store)
+      val navStoreB = navStore.map(sc.broadcast(_))
       val blocks = sc.parallelize(0 until nBlocks, nBlocks).mapPartitions { it =>
         val pid = it.next()
-        val blk = store.tryLoadBlock(pid).getOrElse(
+        val blk = storeB.value.tryLoadBlock(pid).getOrElse(
           throw new PreparedScan.BlockLoadFailed(pid))
         val nav = navBuilder.map { nb =>
-          navStore.flatMap(_.tryLoad(pid, blk.ids, blk.words, nWords)).getOrElse {
+          navStoreB.flatMap(_.value.tryLoad(pid, blk.ids, blk.words, nWords)).getOrElse {
             val built = nb.build(blk.ids, blk.words, nWords)
-            navStore.foreach(_.trySave(pid, built))
+            navStoreB.foreach(_.value.trySave(pid, built))
             built
           }
         }.orNull
         Iterator.single(blk.copy(nav = nav))
-      }.persist(StorageLevel.MEMORY_AND_DISK)
+      }.persist(StorageLevel.MEMORY_AND_DISK).localCheckpoint()
       try {
         val rows = materializedRows(blocks)
         Some(new PreparedScan(blocks, nWords, null, chain.copy(baseRows = rows),
-          rows, () => blocks.unpersist()))
+          rows, null, () => blocks.unpersist()))
       } catch {
         case scala.util.control.NonFatal(e) =>
           blocks.unpersist(blocking = false)
@@ -621,7 +724,7 @@ object PreparedScan {
       base.chain.churnRows + touched.length, newCeilings,
       base.chain.morFolds)
     val lb = deltaRows + math.max(0L, base.rowsLowerBound - touched.length)
-    new PreparedScan(blocks, nWords, supB, chain, lb, () => {
+    new PreparedScan(blocks, nWords, supB, chain, lb, base, () => {
       delta.unpersist()
       supB.unpersist()
       onBaseFree()
@@ -648,7 +751,7 @@ object PreparedScan {
       base.chain.churnRows + touched.length, newCeilings,
       base.chain.morFolds)
     val lb = math.max(0L, base.rowsLowerBound - touched.length)
-    new PreparedScan(base.blocks, nWords = base.nWords, supB, chain, lb, () => {
+    new PreparedScan(base.blocks, base.nWords, supB, chain, lb, base, () => {
       supB.unpersist()
       onBaseFree()
     })
@@ -662,8 +765,9 @@ object PreparedScan {
       (it: Iterator[Block]) => it.map(_.ids.length.toLong).sum).sum
 
   /** Shared block construction: each source partition becomes one block
-    * with `layer` baked in; persisted (NOT yet materialized — callers
-    * count()).
+    * with `layer` baked in; persisted and marked for a local checkpoint
+    * (NOT yet materialized — callers run [[materializedRows]], whose job
+    * caches the blocks and then cuts their lineage).
     */
   private def blockify(codes: DataFrame, nWords: Int, isFlat: Boolean,
                        isIvf: Boolean, withBytes: Boolean, withDoc: Boolean,
@@ -694,6 +798,12 @@ object PreparedScan {
     val cellAt = if (isIvf) 2 else -1
     val bytesAt = if (withBytes) (if (isIvf) 3 else 2) else -1
     val docAt = if (withDoc) bytesAt.max(cellAt).max(1) + 1 else -1
+    // The stores carry the Hadoop configuration (tens of KB). Broadcast,
+    // they add a handle to the block RDD's closure — which every later
+    // scan task still serializes with the RDD — not the configuration.
+    val sc = codes.sparkSession.sparkContext
+    val navStoreB = navStore.map(sc.broadcast(_))
+    val blockStoreB = blockStore.map(sc.broadcast(_))
     cols.rdd.mapPartitions { it =>
       val ids = scala.collection.mutable.ArrayBuilder.make[Long]
       val words = scala.collection.mutable.ArrayBuilder.make[Long]
@@ -736,9 +846,9 @@ object PreparedScan {
       val wordArr = words.result()
       val nav = navBuilder.map { nb =>
         val pid = org.apache.spark.TaskContext.getPartitionId()
-        navStore.flatMap(_.tryLoad(pid, idArr, wordArr, nWords)).getOrElse {
+        navStoreB.flatMap(_.value.tryLoad(pid, idArr, wordArr, nWords)).getOrElse {
           val built = nb.build(idArr, wordArr, nWords)
-          navStore.foreach(_.trySave(pid, built))
+          navStoreB.foreach(_.value.trySave(pid, built))
           built
         }
       }.orNull
@@ -748,9 +858,9 @@ object PreparedScan {
         if (withDoc) docs.result() else null,
         nav,
         layer)
-      blockStore.foreach(
-        _.trySaveBlock(org.apache.spark.TaskContext.getPartitionId(), blk))
+      blockStoreB.foreach(
+        _.value.trySaveBlock(org.apache.spark.TaskContext.getPartitionId(), blk))
       Iterator.single(blk)
-    }.persist(StorageLevel.MEMORY_AND_DISK)
+    }.persist(StorageLevel.MEMORY_AND_DISK).localCheckpoint()
   }
 }

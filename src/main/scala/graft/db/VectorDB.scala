@@ -1262,10 +1262,10 @@ class VectorDB private (
     discardAbsorbed()
     prepared.foreach { case (v, ps) =>
       if (incServingChurnFrac > 0 && isMor && servingEnabled && ps.isAlive) {
-        pendingPrevServing.foreach { case (ov, _) => BlockCache.release(cacheKey, ov) }
+        pendingPrevServing.foreach { case (ov, ops) => BlockCache.release(cacheKey, ov, ops) }
         pendingPrevServing = Some((v, ps))
         pendingPrevCommits = 0
-      } else BlockCache.release(cacheKey, v)
+      } else BlockCache.release(cacheKey, v, ps)
     }
     prepared = None
     // The stash pins a full serving tier in executor memory until the
@@ -1282,7 +1282,7 @@ class VectorDB private (
         (codesMor.foldCeiling(), docsMor.foldCeiling()) != ps.chain.morFolds
       if (!ps.isAlive || foldMoved ||
           pendingPrevCommits > VectorDB.IncServingStashMaxCommits) {
-        BlockCache.release(cacheKey, ov)
+        BlockCache.release(cacheKey, ov, ps)
         pendingPrevServing = None
         pendingPrevCommits = 0
       }
@@ -1445,7 +1445,7 @@ class VectorDB private (
     */
   def incrementalServingOff(): this.type = synchronized {
     incServingChurnFrac = 0.0
-    pendingPrevServing.foreach { case (v, _) => BlockCache.release(cacheKey, v) }
+    pendingPrevServing.foreach { case (v, ps) => BlockCache.release(cacheKey, v, ps) }
     pendingPrevServing = None
     discardAbsorbed()
     this
@@ -1453,9 +1453,9 @@ class VectorDB private (
 
   def disableServing(): Unit = synchronized {
     servingEnabled = false
-    prepared.foreach { case (v, _) => BlockCache.release(cacheKey, v) }
+    prepared.foreach { case (v, ps) => BlockCache.release(cacheKey, v, ps) }
     prepared = None
-    pendingPrevServing.foreach { case (v, _) => BlockCache.release(cacheKey, v) }
+    pendingPrevServing.foreach { case (v, ps) => BlockCache.release(cacheKey, v, ps) }
     pendingPrevServing = None
     discardAbsorbed()
     retryDeferredNavSweep()
@@ -1463,7 +1463,7 @@ class VectorDB private (
 
   /** Drop an unadopted background-absorbed tier (caller holds `this`). */
   private def discardAbsorbed(): Unit = {
-    absorbedReady.foreach { case (_, s) => if (s.isAlive) s.unpersist() }
+    absorbedReady.foreach { case (_, s) => s.unpersist() }
     absorbedReady = None
   }
 
@@ -1478,59 +1478,101 @@ class VectorDB private (
     * filesystem touch on the hot path). On refresh the instance's
     * Catalyst-tier caches drop too, so both execution paths see the
     * same snapshot.
+    *
+    * With `pin`, the scan comes back pinned ([[PreparedScan.pin]]; the
+    * caller unpins): a commit may then release it mid-search without
+    * freeing the blocks the search is scanning.
     */
-  private def preparedScan(): Option[PreparedScan] = {
+  private def preparedScan(pin: Boolean = false): Option[PreparedScan] = {
     if (!servingEnabled) None
     else {
       maybeRefresh()
-      prepared match {
-        case Some((v, ps)) =>
-          val swapped = adoptAbsorbed(v)
-          val out = swapped.getOrElse(ps)
-          maybeScheduleAbsorb(v, out)
-          Some(out)
-        case None => synchronized {
-          prepared match {
-            case Some((_, ps)) => Some(ps)
-            case None if hasData =>
-              val cur = lastSeenVersion
-              val stash = pendingPrevServing
-              pendingPrevServing = None
-              var stashAdopted = false
-              try {
-                // Another instance may have background-flattened this
-                // snapshot already — adopt its absorbed twin from the
-                // shared cache instead of building.
-                BlockCache.tryAcquire(cacheKey,
-                    BlockCache.absorbedVersion(cur)) match {
-                  case Some(abs) =>
-                    prepared = Some((BlockCache.absorbedVersion(cur), abs))
-                    Some(abs)
-                  case None =>
-                    val ps = BlockCache.acquire(cacheKey, cur) {
-                      val extended = stash.flatMap { case (pv, prev) =>
-                        tryExtendServing(pv, prev)
-                      }
-                      extended match {
-                        case Some(e) => stashAdopted = true; e
-                        case None => buildFullServing(allowWarmChain = true)
-                      }
+      // Lock-free fast path. A scan a racing commit freed between the
+      // read and the pin falls through to the locked path.
+      val fast = prepared.flatMap { case (v, ps) =>
+        val out = adoptAbsorbed(v).getOrElse(ps)
+        if (pin && !out.pin()) None
+        else { maybeScheduleAbsorb(v, out); Some(out) }
+      }
+      if (fast.isDefined) fast
+      else synchronized {
+        val out = prepared match {
+          case Some((_, ps)) => Some(ps)
+          case None if hasData =>
+            val cur = lastSeenVersion
+            val stash = pendingPrevServing
+            pendingPrevServing = None
+            var stashAdopted = false
+            try {
+              // Another instance may have background-flattened this
+              // snapshot already — adopt its absorbed twin from the
+              // shared cache instead of building.
+              BlockCache.tryAcquire(cacheKey,
+                  BlockCache.absorbedVersion(cur)) match {
+                case Some(abs) =>
+                  prepared = Some((BlockCache.absorbedVersion(cur), abs))
+                  Some(abs)
+                case None =>
+                  val ps = BlockCache.acquire(cacheKey, cur) {
+                    val extended = stash.flatMap { case (pv, prev) =>
+                      tryExtendServing(pv, prev)
                     }
-                    prepared = Some((cur, ps))
-                    maybeScheduleAbsorb(cur, ps)
-                    Some(ps)
-                }
-              } finally {
-                // Not adopted (full rebuild, ineligible window, or the
-                // entry already existed so the builder never ran):
-                // release the held-back reference.
-                if (!stashAdopted)
-                  stash.foreach { case (v, _) => BlockCache.release(cacheKey, v) }
-                retryDeferredNavSweep()
+                    extended match {
+                      case Some(e) => stashAdopted = true; e
+                      case None => buildFullServing(allowWarmChain = true)
+                    }
+                  }
+                  prepared = Some((cur, ps))
+                  maybeScheduleAbsorb(cur, ps)
+                  Some(ps)
               }
-            case None => None
-          }
+            } finally {
+              // Not adopted (full rebuild, ineligible window, or the
+              // entry already existed so the builder never ran):
+              // release the held-back reference.
+              if (!stashAdopted)
+                stash.foreach { case (v, sps) => BlockCache.release(cacheKey, v, sps) }
+              retryDeferredNavSweep()
+            }
+          case None => None
         }
+        // Pinned under the lock: this instance's own reference keeps the
+        // scan alive until the pin is held, whatever a commit does next.
+        if (pin && out.exists(!_.pin()))
+          throw new PreparedScan.ScanLost("serving scan already freed", null)
+        out
+      }
+    }
+  }
+
+  /** Run a served search against the current serving scan, pinned for
+    * the search's duration (None when serving is off — the caller takes
+    * the Catalyst path). A scan that cannot answer
+    * ([[PreparedScan.ScanLost]]: an executor lost one of its
+    * lineage-free blocks) is dropped, and the search retries once
+    * against the scan [[preparedScan]] rebuilds.
+    */
+  private def servedScan[T](search: PreparedScan => T): Option[T] = {
+    def attempt(): Option[T] = preparedScan(pin = true).map { ps =>
+      try search(ps) finally ps.unpin()
+    }
+    try attempt()
+    catch {
+      case lost: PreparedScan.ScanLost =>
+        VectorDB.log.warn(s"serving scan lost, rebuilding: ${lost.getMessage}")
+        dropDeadPrepared()
+        attempt()
+    }
+  }
+
+  /** Release this instance's serving scan if it is no longer alive, so
+    * the next [[preparedScan]] rebuilds instead of returning it.
+    */
+  private def dropDeadPrepared(): Unit = synchronized {
+    prepared.foreach { case (v, ps) =>
+      if (!ps.isAlive) {
+        BlockCache.release(cacheKey, v, ps)
+        prepared = None
       }
     }
   }
@@ -1564,7 +1606,8 @@ class VectorDB private (
           val shared = BlockCache.offer(cacheKey,
             BlockCache.absorbedVersion(v), ascan)
           if (!(shared eq ascan)) ascan.unpersist() // lost the offer race
-          BlockCache.release(cacheKey, v) // drop the chain reference
+          prepared.foreach { case (_, chain) =>
+            BlockCache.release(cacheKey, v, chain) } // drop the chain reference
           prepared = Some((BlockCache.absorbedVersion(v), shared))
           Some(shared)
         case Some((av, ascan)) =>
@@ -1869,7 +1912,7 @@ class VectorDB private (
         val ext = tryExtendServing(u, b)
         lastWarmRestartTimings = Some(
           ((tSeed1 - tSeed0) / 1e6, (System.nanoTime() - tSeed1) / 1e6))
-        if (ext.isEmpty) BlockCache.release(cacheKey, u)
+        if (ext.isEmpty) BlockCache.release(cacheKey, u, b)
         else VectorDB.log.info(
           s"warm chain restart: loaded persisted blocks of $u " +
             s"(${if (loaded) "from disk" else "resident"}) and adopted " +
@@ -1943,7 +1986,7 @@ class VectorDB private (
         // .extendDeleteOnly; the crawl-loop delete regime).
         PreparedScan.extendDeleteOnly(prev, touched,
           newCeilings = (cc1, dc1),
-          onBaseFree = () => BlockCache.release(cacheKey, prevVersion))
+          onBaseFree = () => BlockCache.release(cacheKey, prevVersion, prev))
       else {
         val nParts = math.max(1L, math.min(64L,
           (touched.length.toLong + VectorDB.IncServingRowsPerBlock - 1) /
@@ -1962,7 +2005,7 @@ class VectorDB private (
           withBytes = true, withDoc = true,
           navBuilder = indexStrategy.navBuilder(strategyCtx),
           newCeilings = (cc1, dc1),
-          onBaseFree = () => BlockCache.release(cacheKey, prevVersion))
+          onBaseFree = () => BlockCache.release(cacheKey, prevVersion, prev))
       }
     val t2 = System.nanoTime()
     lastExtendTimings = Some(((t1 - t0) / 1e6, (t2 - t1) / 1e6))
@@ -2096,9 +2139,8 @@ class VectorDB private (
   def searchVector(q: Seq[Double], k: Int = 10, binaryOversample: Int = 10,
                    int8Oversample: Int = 3, nprobe: Int = Int.MaxValue): DataFrame = {
     validateSearch(k, binaryOversample, int8Oversample, nprobe)
-    preparedScan() match {
-      case Some(ps) =>
-        hitsToDf(servedHits(ps, q, k, binaryOversample, int8Oversample, nprobe, None))
+    servedScan(servedHits(_, q, k, binaryOversample, int8Oversample, nprobe, None)) match {
+      case Some(hits) => hitsToDf(hits)
       case None =>
         catalystFunnel(q, k, binaryOversample, int8Oversample, nprobe, None)
     }
@@ -2144,9 +2186,9 @@ class VectorDB private (
                         binaryOversample: Int, int8Oversample: Int,
                         nprobe: Int): DataFrame = {
     validateSearch(k, binaryOversample, int8Oversample, nprobe)
-    preparedScan() match {
-      case Some(ps) =>
-        hitsToDf(servedHits(ps, q, k, binaryOversample, int8Oversample, nprobe, Some(sel)))
+    servedScan(servedHits(_, q, k, binaryOversample, int8Oversample, nprobe,
+        Some(sel))) match {
+      case Some(hits) => hitsToDf(hits)
       case None =>
         catalystFunnel(q, k, binaryOversample, int8Oversample, nprobe, Some(sel.pred))
     }
@@ -2168,9 +2210,8 @@ class VectorDB private (
                  int8Oversample: Int = 3, nprobe: Int = Int.MaxValue,
                  sel: Option[DocSelector] = None): Seq[VectorDB.SearchHit] = {
     validateSearch(k, binaryOversample, int8Oversample, nprobe)
-    preparedScan() match {
-      case Some(ps) =>
-        servedHits(ps, q, k, binaryOversample, int8Oversample, nprobe, sel)
+    servedScan(servedHits(_, q, k, binaryOversample, int8Oversample, nprobe, sel)) match {
+      case Some(hits) => hits
       case None =>
         val df = catalystFunnel(q, k, binaryOversample, int8Oversample, nprobe,
           sel.map(_.pred))
@@ -2202,10 +2243,8 @@ class VectorDB private (
     require(radius >= 0, s"radius must be >= 0, got $radius")
     requireNonEmpty()
     val qWords = graft.operators.Search.packQuery(q)
-    preparedScan() match {
-      case Some(ps) =>
-        ps.withinRadius(qWords.toArray, radius, None, sel.map(_.idSet))
-          .map(h => (h.id, h.hamming)).toIndexedSeq
+    servedScan(_.withinRadius(qWords.toArray, radius, None, sel.map(_.idSet))) match {
+      case Some(hits) => hits.map(h => (h.id, h.hamming)).toIndexedSeq
       case None =>
         val hammingCol =
           if (isFlat) (0 until nWords).map(i =>
@@ -2630,10 +2669,9 @@ class VectorDB private (
     require(queries.nonEmpty, "searchManyHits needs at least one query")
     require(queries.map(_._1).distinct.size == queries.size,
       "searchManyHits qids must be distinct")
-    preparedScan() match {
-      case Some(ps) =>
-        servedManyHits(ps, queries, k, binaryOversample, int8Oversample,
-          nprobe, sel)
+    servedScan(servedManyHits(_, queries, k, binaryOversample, int8Oversample,
+        nprobe, sel)) match {
+      case Some(hits) => hits
       case None =>
         val df = searchMany(queries, k, binaryOversample, int8Oversample,
           nprobe, sel)
@@ -2704,10 +2742,10 @@ class VectorDB private (
     // map-side (HammingTopKCodeAgg) and the cold tier serves phase III.
     // Bit-identical either way (PreparedScanSpec pins the batched
     // parity across layouts and IVF probing).
-    preparedScan() match {
-      case Some(ps) =>
-        val out = servedManyHits(ps, queries, k, binaryOversample,
-          int8Oversample, nprobe, sel).flatMap { case (qid, hits) =>
+    servedScan(servedManyHits(_, queries, k, binaryOversample,
+        int8Oversample, nprobe, sel)) match {
+      case Some(served) =>
+        val out = served.flatMap { case (qid, hits) =>
           hits.zipWithIndex.map { case (h, i) =>
             (qid, i + 1, h.docId, h.scoreHamming, h.scoreBinary,
               h.scoreCossim, h.doc) }
@@ -3101,13 +3139,14 @@ object VectorDB {
     *    created it (threads live 60 s across unrelated callers), so a
     *    tier commit write could be killed by an unrelated
     *    `cancelJobGroup` or land in the wrong pool;
-    *  - when the CALLER-thread op `b` throws, the pooled future is
-    *    cancelled and awaited before the exception propagates — the
-    *    sequential code could never start the second op after the
-    *    first failed, and an abandoned in-flight tier write could
-    *    otherwise land AFTER the failed commit (the next commit's
-    *    truncateAbove/writeCommitted ceiling could then cover an
-    *    aborted operation's rows).
+    *  - when the CALLER-thread op `b` throws, the pooled op is skipped
+    *    if it has not started, and otherwise awaited (NOT cancelled —
+    *    a long tier write delays the failure by its full duration)
+    *    before the exception propagates — the sequential code could
+    *    never start the second op after the first failed, and an
+    *    abandoned in-flight tier write could otherwise land AFTER the
+    *    failed commit (the next commit's truncateAbove/writeCommitted
+    *    ceiling could then cover an aborted operation's rows).
     */
   private[db] def tierParallel[A, B](a: => A, b: => B): (A, B) = {
     // 0 = pending, 1 = running, 2 = abandoned (b failed before a began)

@@ -171,12 +171,12 @@ class BenchGuardSpec extends AnyFunSuite {
       // COMPACT line must be the LAST stdout line of the run.
       val jsonLines = out.filter(_.startsWith("{"))
       assert(jsonLines.size == 2, s"expected detail + compact lines:\n${out.mkString("\n")}")
-      assert(out.last == jsonLines.last,
-        "the compact line must be the last stdout line")
+      // The driver parses the LAST stdout line exactly as printed — no
+      // prefix stripping, no line selection.
+      val line = out.last
       val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      val detail = om.readTree(jsonLines.head)
-      val line = jsonLines.last
       val root = om.readTree(line)
+      val detail = om.readTree(jsonLines.head)
       assert(root.get("metric").asText() == "total", line)
       assert(detail.get("metric").asText() == "detail", jsonLines.head)
       assert(root.get("mode").asText() == "inprocess", line)
@@ -195,11 +195,12 @@ class BenchGuardSpec extends AnyFunSuite {
     * JSON), and every BENCH_r*.json since round 10 shipped
     * `parsed: null` because the old ~4.8k single line never fit. The
     * compact final line over the FULL declared query set at worst-case
-    * 3-decimal values must fit the window with slack.
+    * 3-decimal values (three integer digits: a median up to 999 s) must
+    * fit the window with slack.
     */
   test("the compact final line fits the driver's 2000-char tail window") {
     val med = collection.mutable.LinkedHashMap.empty[String, Double]
-    SparkEntry.queries.keys.toSeq.sorted.foreach(q => med += q -> 8.888)
+    SparkEntry.queries.keys.toSeq.sorted.foreach(q => med += q -> 888.888)
     val line = Bench.benchFinalLine(med, errors = 0, failed = Nil,
       sfDir = "/root/testdata/sf0.1", mode = "forked", guard = "armed",
       reruns = Seq("d", "q", "v"))

@@ -26,22 +26,51 @@ class CrossJvmSpec extends AnyFunSuite {
     ids.map(i => (i.toLong, s"document number $i topic ${i % 7}"))
       .toDF("doc_id", "text")
 
-  /** Fork one probe invocation; returns its PROBE: line. */
-  private def probe(args: String*): String = {
+  /** Start one probe invocation with its stderr going to a temp file:
+    * a child that logs more than a pipe buffer to stderr while the
+    * parent reads stdout would otherwise block both.
+    */
+  private def startProbe(args: String*): (Process, java.io.File) = {
     val launcher = new java.io.File("scripts/run.sh")
     assume(launcher.isFile &&
       new java.io.File("target/scala-2.13/classes/graft/CrossJvmProbe.class").isFile,
       "compiled-classes launcher not available")
-    val cmd = Seq("bash", launcher.getPath, "graft.CrossJvmProbe") ++ args
-    val pb = new ProcessBuilder(cmd: _*)
-    pb.redirectErrorStream(false)
-    val proc = pb.start()
+    val err = java.io.File.createTempFile("graft-probe", ".err")
+    err.deleteOnExit()
+    val pb = new ProcessBuilder(
+      (Seq("bash", launcher.getPath, "graft.CrossJvmProbe") ++ args): _*)
+    pb.redirectError(err)
+    (pb.start(), err)
+  }
+
+  /** Read a started probe's stdout to EOF, wait for it to exit 0, and
+    * return the first stdout line starting with `prefix`.
+    */
+  private def probeLine(proc: Process, err: java.io.File, prefix: String,
+                        what: String): String = {
     val out = scala.io.Source.fromInputStream(proc.getInputStream).getLines().toList
-    val err = scala.io.Source.fromInputStream(proc.getErrorStream).getLines().toList
     val code = proc.waitFor()
-    assert(code == 0, s"probe ${args.mkString(" ")} exited $code:\n${err.takeRight(15).mkString("\n")}")
-    out.find(_.startsWith("PROBE:")).getOrElse(
-      fail(s"no PROBE line from ${args.mkString(" ")}:\n${out.mkString("\n")}"))
+    def errTail: String = {
+      val src = scala.io.Source.fromFile(err)
+      try src.getLines().toList.takeRight(15).mkString("\n") finally src.close()
+    }
+    assert(code == 0, s"probe $what exited $code:\n$errTail")
+    out.find(_.startsWith(prefix)).getOrElse(
+      fail(s"no $prefix line from $what:\n${out.mkString("\n")}\n$errTail"))
+  }
+
+  /** Fork one probe invocation; returns its PROBE: line. */
+  private def probe(args: String*): String = {
+    val (proc, err) = startProbe(args: _*)
+    probeLine(proc, err, "PROBE:", args.mkString(" "))
+  }
+
+  /** Poll `cond` until it holds or `timeoutMs` passes; true if it held. */
+  private def within(timeoutMs: Long)(cond: => Boolean): Boolean = {
+    val deadline = System.nanoTime() + timeoutMs * 1000000L
+    var ok = cond
+    while (!ok && System.nanoTime() < deadline) { Thread.sleep(2); ok = cond }
+    ok
   }
 
   test("a second JVM is fenced by the lease, commits after release, and both sides see one history") {
@@ -59,8 +88,7 @@ class CrossJvmSpec extends AnyFunSuite {
     assert(probe("commit", dir, "1000", "5") == "PROBE: COMMIT_OK 45")
     // …and THIS JVM observes the foreign commit via the marker poll
     db.pollMarkerEvery(1)
-    Thread.sleep(5)
-    assert(db.count() == 45,
+    assert(within(30000)(db.count() == 45),
       "the first JVM must adopt the second JVM's commit via the marker")
   }
 
@@ -82,9 +110,8 @@ class CrossJvmSpec extends AnyFunSuite {
     // must EXTEND the resident chain over the foreign window (depth 1),
     // not fall back to a full rebuild
     db.pollMarkerEvery(1)
-    Thread.sleep(5)
-    val ids = db.searchRadius(q, 64).map(_._1).toSet
-    assert(ids == ((0L until 60L) ++ (1000L until 1007L)).toSet,
+    val want = ((0L until 60L) ++ (1000L until 1007L)).toSet
+    assert(within(30000)(db.searchRadius(q, 64).map(_._1).toSet == want),
       "the serving tier must include the foreign window's rows")
     assert(db.servingChainForTest.exists(_.depth == 1),
       s"a qualifying foreign commit must chain-extend " +
@@ -103,16 +130,9 @@ class CrossJvmSpec extends AnyFunSuite {
     val db = VectorDB.openOrCreate(spark, dir, storage = VectorDB.StorageMor)
     db.addDocuments(fixture(0 until 10))
 
-    val launcher = new java.io.File("scripts/run.sh")
-    assume(launcher.isFile &&
-      new java.io.File("target/scala-2.13/classes/graft/CrossJvmProbe.class").isFile,
-      "compiled-classes launcher not available")
     val nCommits = 25
     val maxN = 10 + 2 * nCommits
-    val pb = new ProcessBuilder("bash", launcher.getPath,
-      "graft.CrossJvmProbe", "watch", dir, "12000", maxN.toString)
-    pb.redirectErrorStream(false)
-    val proc = pb.start()
+    val (proc, err) = startProbe("watch", dir, "12000", maxN.toString)
     // gate: wait for the probe's watch loop to actually start
     val gate = new java.io.File(dir, "_probe_watching")
     val gateDeadline = System.currentTimeMillis() + 120000
@@ -125,14 +145,8 @@ class CrossJvmSpec extends AnyFunSuite {
       db.addDocuments(fixture(100 + 2 * i until 100 + 2 * i + 2))
       i += 1
     }
-    val out = scala.io.Source.fromInputStream(proc.getInputStream).getLines().toList
-    val err = scala.io.Source.fromInputStream(proc.getErrorStream).getLines().toList
-    val code = proc.waitFor()
-    assert(code == 0, s"watch probe exited $code:\n${err.takeRight(15).mkString("\n")}")
-    val line = out.find(_.startsWith("PROBE: WATCH")).getOrElse(
-      fail(s"no PROBE line:\n${out.mkString("\n")}"))
-    assert(line.contains("ok=true"),
-      s"$line\n${err.takeRight(10).mkString("\n")}")
+    val line = probeLine(proc, err, "PROBE: WATCH", "watch")
+    assert(line.contains("ok=true"), line)
     // the probe must have actually observed a commit landing mid-watch
     // (each MOR count is a full merged-read job — seconds on a loaded
     // box — so even 2 distinct values means reads raced ~25 commits)

@@ -96,6 +96,23 @@ class IncrementalServingSpec extends AnyFunSuite {
     } finally db.disableServing()
   }
 
+  test("chain layers keep a lineage-free task binary: extension with rows and delete-only") {
+    val (db, twin) = mirrored()
+    val q = Array.fill(16)(0x5a5a5a5aL)
+    def binary(): Int = db.preparedForTest.get.taskBinaryBytes(q, 100)
+    try {
+      hits(db, "tok1")
+      db.addDocuments(Seq((9001L, "tok1 tok5")).toDF("doc_id", "text"))
+      assert(hits(db, "tok1 tok5") == hits(twin, "tok1 tok5"))
+      assert(db.servingChainForTest.exists(_.depth == 1), "append must EXTEND")
+      assert(binary() <= 8192, s"extension task binary ${binary()} B > 8 KB")
+      db.removeDocs(Seq(7L))
+      assert(hits(db, "tok1 tok5") == hits(twin, "tok1 tok5"))
+      assert(db.servingChainForTest.exists(_.depth == 2), "delete must EXTEND")
+      assert(binary() <= 8192, s"delete-only task binary ${binary()} B > 8 KB")
+    } finally db.disableServing()
+  }
+
   test("radius, batched, and filtered searches see the chain exactly") {
     val (db, twin) = mirrored()
     try {

@@ -148,6 +148,85 @@ class PreparedScanSpec extends AnyFunSuite {
     } finally ps.unpersist()
   }
 
+  test("served blocks are lineage-free: full build and warm load ship ≤ 8 KB per task") {
+    val q = Array.fill(16)(0x5a5a5a5aL)
+    val db = VectorDB.openOrCreate(spark, freshDir())
+    db.addDocuments(fixture(120))
+    db.enableServing()
+    try {
+      val full = db.preparedForTest.get.taskBinaryBytes(q, 100)
+      assert(full <= 8192, s"full-build task binary $full B > 8 KB")
+    } finally db.disableServing()
+
+    val nsw = VectorDB.openOrCreate(spark, freshDir(), index = VectorDB.IndexNsw)
+      .blockPersistence(0L)
+    nsw.addDocuments(fixture(120))
+    nsw.enableServing()
+    nsw.disableServing()
+    val loads0 = BlockStore.loadsForTest.get()
+    nsw.enableServing()
+    try {
+      assert(BlockStore.loadsForTest.get() > loads0, "re-enable must warm-load")
+      val warm = nsw.preparedForTest.get.taskBinaryBytes(q, 100)
+      assert(warm <= 8192, s"warm-load task binary $warm B > 8 KB")
+    } finally nsw.disableServing()
+  }
+
+  test("a pinned scan keeps its blocks past the owner's unpersist; the last unpin frees them") {
+    val rnd = new scala.util.Random(11)
+    val df = spark.createDataFrame((0 until 90).map(i =>
+      (i.toLong, rnd.nextLong(), rnd.nextLong()))).toDF("doc_id", "c0", "c1")
+      .repartition(3)
+    val ps = PreparedScan.build(df, nWords = 2, isFlat = true, isIvf = false)
+    val rdd = ps.blocksRddId
+    val q = Array(rnd.nextLong(), rnd.nextLong())
+    val expected = ps.topB(q, 9).map(h => (h.id, h.hamming)).toSeq
+    assert(ps.pin())
+    ps.unpersist()
+    assert(!ps.isAlive, "an owner-released scan is not offered to new searches")
+    assert(spark.sparkContext.getPersistentRDDs.contains(rdd),
+      "a held pin must keep the blocks cached")
+    assert(ps.topB(q, 9).map(h => (h.id, h.hamming)).toSeq == expected)
+    ps.unpin()
+    assert(!spark.sparkContext.getPersistentRDDs.contains(rdd),
+      "the last unpin must free the blocks")
+    assert(!ps.pin(), "a freed scan cannot be pinned again")
+    intercept[PreparedScan.ScanLost](ps.topB(q, 9))
+  }
+
+  test("a lost serving block is rebuilt, not recomputed; hits equal the Catalyst plan") {
+    val dir = freshDir()
+    val db = VectorDB.openOrCreate(spark, dir)
+    db.addDocuments(fixture(200))
+    db.enableServing()
+    // a second serving instance shares the entry that loses the block
+    val other = VectorDB.openOrCreate(spark, dir).enableServing()
+    val twin = VectorDB.openOrCreate(spark, dir)
+    val folder = db.blockCacheKey.folder
+    try {
+      val lostScan = db.preparedForTest.get
+      assert(other.preparedForTest.get eq lostScan)
+      val rdd = lostScan.blocksRddId
+      org.apache.spark.SparkEnv.get.blockManager.removeBlock(
+        org.apache.spark.storage.RDDBlockId(rdd, 0))
+      val qv = (0 until 64).map(i => math.cos(i * 1.1) / 7.0)
+      val exact = twin.searchHits(qv, k = 7, binaryOversample = 4, int8Oversample = 2)
+      val served = db.searchHits(qv, k = 7, binaryOversample = 4, int8Oversample = 2)
+      assert(served.nonEmpty && served == exact,
+        s"rebuilt serving diverged:\n$served\nvs\n$exact")
+      assert(!lostScan.isAlive, "the scan that lost a block must be marked dead")
+      val rebuilt = db.preparedForTest.get
+      assert(!(rebuilt eq lostScan), "the search must rebuild the scan")
+      // the other holder drops its reference on the retired entry and
+      // adopts the rebuilt one, never decrementing it
+      assert(other.searchHits(qv, k = 7, binaryOversample = 4, int8Oversample = 2) == exact)
+      assert(other.preparedForTest.get eq rebuilt)
+      assert(!spark.sparkContext.getPersistentRDDs.contains(rdd),
+        "the lost scan's surviving blocks must be freed")
+    } finally { db.disableServing(); other.disableServing() }
+    assert(BlockCache.liveEntriesFor(folder) == 0)
+  }
+
   test("payload chunking: rows read identically across chunk seams") {
     // A single flat payload array caps a block at Int.MaxValue/byteLen
     // rows (~2M at dim 1024) — the true-geometry 8M bench overflowed
